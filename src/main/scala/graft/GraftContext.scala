@@ -999,26 +999,77 @@ object GraftContext {
     else "parquet"
   }
 
-  /** Session builder with the scale-appropriate defaults for this engine:
-    * AQE on (runtime re-planning ≈ the reference's row-estimate adaptive
-    * kernels), shuffle partitions sized for the local harness.
+  /** The engine configuration every session runs: users, the tests, the
+    * oracle dump (`Verify`), `Bench`, `PlanDump` and the tools all get it
+    * from [[buildSession]], so the configuration that is checked and timed
+    * is the one that ships.
+    */
+  val engineConfs: Seq[(String, String)] = Seq(
+    "spark.sql.extensions" -> "graft.GraftExtensions",
+    // AQE: runtime re-planning ≈ the reference's row-estimate adaptive
+    // kernels
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    // also split skewed partitions when the join feeds a same-key
+    // aggregate (the extra exchange it introduces is bounded by the agg's
+    // output, while the straggler it removes is bounded by the hot key's
+    // row count); without this, OptimizeSkewedJoin silently declines the
+    // join→groupBy shape most pipeline queries have (join_skew_zipf)
+    "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
+    // the 256m default assumes multi-GB executor shuffles; on local cores
+    // a straggler partition is painful well before that (join_skew_zipf's
+    // hot key is ~100m compressed at sf10)
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64m",
+    // runtime broadcasts follow the same 64 MB policy as Relational.dim():
+    // a FILTERED dimension is invisible to file-stat sizing, but AQE sees
+    // the true post-shuffle bytes and can convert the join, sparing the
+    // fact side its exchange (q8-class shapes at sf100)
+    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "64m",
+    // subset-key co-partitioning: the KN3 scale path pins its model
+    // pipeline to HashPartitioning(v) so five vocabulary-sized exchanges
+    // collapse into one; the default (true) re-exchanges both join sides
+    // on the full key set. The co-partitioned sides pin their partition
+    // count to spark.sql.shuffle.partitions, so parallelism is unchanged.
+    "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false")
+
+  /** `SPARK_GRAFT_CONF`-style overrides, `k=v;k=v` → settings for
+    * [[buildSession]]'s `extra`. Blank entries, entries without `=` and
+    * entries with an empty key are skipped; a value may contain `=`.
+    */
+  def parseConf(spec: String): Map[String, String] =
+    spec.split(';').toSeq.map(_.trim).filter(_.contains("=")).flatMap { kv =>
+      val i = kv.indexOf('=')
+      val k = kv.take(i).trim
+      if (k.isEmpty) None else Some(k -> kv.drop(i + 1).trim)
+    }.toMap
+
+  /** The one session builder: [[engineConfs]], `shufflePartitions`, then
+    * `extra` (deployment settings such as warehouse/metastore paths, and
+    * probe overrides, which win over the engine confs).
     * `hive = true` backs the catalog with a Hive metastore
     * (`enableHiveSupport`) so existing warehouse tables — schema AND
     * partitions — resolve by name, like the reference's
     * `create_table(name, hive_cursor)` (hive.py:96-294).
+    * A `local-cluster[...]` master runs executors as separate JVMs, which
+    * do not inherit this classpath, so it is shipped to them.
+    *
+    * `spark.shuffle.*` and `spark.executor.*` settings take effect only
+    * when the SparkContext is created: if a session is already running,
+    * `getOrCreate` returns it and those keys in `extra` are ignored.
     */
   def buildSession(master: String = "local[32]",
-      shufflePartitions: Int = 32, hive: Boolean = false): SparkSession = {
-    val builder = SparkSession.builder()
-      .master(master)
-      .appName("graft")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      shufflePartitions: Int = 32, hive: Boolean = false,
+      extra: Map[String, String] = Map.empty): SparkSession = {
+    val classPath =
+      if (master.startsWith("local-cluster"))
+        Map("spark.executor.extraClassPath" -> sys.props("java.class.path"))
+      else Map.empty[String, String]
+    val builder = SparkSession.builder().master(master).appName("graft")
+    (engineConfs ++ Seq("spark.sql.shuffle.partitions" -> shufflePartitions.toString) ++
+      classPath ++ extra).foreach { case (k, v) => builder.config(k, v) }
     val spark = (if (hive) builder.enableHiveSupport() else builder).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

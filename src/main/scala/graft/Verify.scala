@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,22 +14,8 @@ object Verify {
     // local-cluster[2,16,4096] runs real executor PROCESSES, so every
     // broadcast, custom Expression, and Aggregator crosses a
     // serialization + classloader boundary instead of a thread boundary.
-    // Executors are separate JVMs that don't inherit this classpath, so
-    // ship it explicitly.
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (master.startsWith("local-cluster"))
-      builder.config("spark.executor.extraClassPath",
-        sys.props("java.class.path"))
-    else builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftContext.buildSession(master, cpus.toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

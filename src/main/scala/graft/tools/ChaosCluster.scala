@@ -33,18 +33,9 @@ object ChaosCluster {
   }
 
   private def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,8,2048]"))
-      .appName("graft-chaos")
-      .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-      .config("spark.executor.memory",
-        sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "2g"))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.GraftContext.buildSession(
+      sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,8,2048]"), 16,
+      extra = Map("spark.executor.memory" -> "2g"))
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -137,14 +137,8 @@ object FixtureVariants {
 
   def main(args: Array[String]): Unit = {
     val (srcDir, outRoot) = (args(0), args(1))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftContext.buildSession(
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]", 8)
     generate(spark, srcDir, outRoot)
     println(s"[fixture-variants] wrote variant dirs under $outRoot")
     spark.stop()

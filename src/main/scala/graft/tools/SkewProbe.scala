@@ -3,7 +3,7 @@ package graft.tools
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Planted-skew probe (`runMain graft.tools.SkewProbe <sfDir> [out.json]`):
@@ -41,28 +41,23 @@ object SkewProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: SkewProbe <sfDir> [out.json]")
     val sfDir = args(0)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-skew-probe")
-      .config("spark.sql.shuffle.partitions", "200")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // detection threshold sized to this box: the default 256m assumes
-      // multi-GB executor shuffles; the planted hot partition is ~100m
-      // COMPRESSED (zkey=1 runs compress ~8x) and would sit under the
-      // default forever. 32m threshold + 16m split target ≈ the ratio a
-      // large cluster sees with the defaults at 10x the data.
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32m")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-      // keep AQE from folding the 200 partitions back into a handful
-      // before the join — the probe wants cluster-like task granularity
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // probe overrides on the engine session:
+    // detection threshold sized to this box: the default 256m assumes
+    // multi-GB executor shuffles; the planted hot partition is ~100m
+    // COMPRESSED (zkey=1 runs compress ~8x) and would sit under the
+    // default forever. 32m threshold + 16m split target ≈ the ratio a
+    // large cluster sees with the defaults at 10x the data.
+    // Coalescing off keeps AQE from folding the 200 partitions back into
+    // a handful before the join — the probe wants cluster-like task
+    // granularity.
+    val spark = graft.GraftContext.buildSession(
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]", 200,
+      extra = Map(
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32m",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16m",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1"))
 
     val durations = new ConcurrentLinkedQueue[(Int, Long)]()
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -91,7 +86,7 @@ object SkewProbe {
       // OptimizeSkewedJoin is free to split the hot partition. (A
       // same-key aggregate after the join suppresses the split unless
       // spark.sql.adaptive.forceOptimizeSkewedJoin is on — which the
-      // bench session sets; see join_skew_zipf.)
+      // engine session sets; see join_skew_zipf.)
       val fing = joined.agg(count(lit(1)),
         sum(hash(col("zkey"), col("qty"), col("n_sup")).cast("long")))
       // collect(), NOT head(): head() plans a separate limit-1 execution

@@ -97,16 +97,17 @@ class BenchGuardSpec extends AnyFunSuite {
     // JSON (~24 KB) always lost its head there, so BENCH_r09..r13 all
     // parsed null. The compact FINAL line must (a) start with the
     // {"metric": prefix the parser keys on, (b) fit the tail with slack
-    // even with worst-case-ish field contents, (c) be valid JSON.
+    // even with worst-case-ish field contents, (c) be valid JSON — also
+    // when an environment-derived field carries a quote or a backslash.
     val contention =
       """"contended":false,"contention":{"canary_max_sec":0.35,"foreign_jvms":[]}"""
     val line = Bench.compactLine(
       total = 98.14520931100002, nQueries = 199, nOk = 199,
       sfDir = "/root/testdata/sf0.1", master = "local-cluster[2,16,4096]",
-      shuffleParts = "121", policy = "discard_first",
+      shuffleParts = "12\"1", policy = "discard\\first",
       canaryStart = 0.235343752, canaryEnd = 0.139148069,
-      contentionJson = contention, gitSha = "921f22166635-dirtyunknown",
-      stamp = "2026-08-18T04:30:20.423Z",
+      contentionJson = contention, gitSha = "921f22166635-dirty\"unknown",
+      stamp = "2026-08-18T04:30:20.423Z\\",
       fullJsonPath = "/root/repo/target/bench-local_32_-89g-sf0.1.json")
     assert(line.startsWith("""{"metric":"total","value":"""))
     assert(line.length < 1500, s"compact line too long: ${line.length}")
@@ -118,7 +119,10 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(parsed.get("n_errors").asInt() == 0)
     assert(parsed.get("sf").asText() == "/root/testdata/sf0.1")
     assert(parsed.get("contended").asBoolean() == false)
-    assert(parsed.get("git_sha").asText().startsWith("921f2216"))
+    assert(parsed.get("git_sha").asText() == "921f22166635-dirty\"unknown")
+    assert(parsed.get("shuffle_partitions").asText() == "12\"1")
+    assert(parsed.get("samples_policy").asText() == "discard\\first")
+    assert(parsed.get("timestamp").asText() == "2026-08-18T04:30:20.423Z\\")
   }
 
   test("foreignSparkJvms tolerates a truncated process table (no cycles)") {

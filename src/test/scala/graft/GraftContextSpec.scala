@@ -76,6 +76,22 @@ class GraftContextSpec extends SparkSuite {
     assert(r.getInt(1) == 16)
   }
 
+  test("the test session runs every GraftContext.engineConfs entry") {
+    // SparkSuite builds its session through GraftContext.buildSession, so
+    // every spec exercises the engine users get; a spec that leaves an
+    // engine key changed or unset behind also fails here
+    GraftContext.engineConfs.foreach { case (k, v) =>
+      assert(spark.conf.get(k) == v, s"$k")
+    }
+  }
+
+  test("parseConf: blank, keyless and '='-bearing entries") {
+    assert(GraftContext.parseConf("") == Map.empty)
+    assert(GraftContext.parseConf("=v") == Map.empty)
+    assert(GraftContext.parseConf("k=") == Map("k" -> ""))
+    assert(GraftContext.parseConf("a=b=c; ;d=e") == Map("a" -> "b=c", "d" -> "e"))
+  }
+
   test("configure translates reference config keys to Spark confs") {
     val ctx = GraftContext(spark)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

@@ -411,9 +411,11 @@ class ScaleSpec extends SparkSuite {
     // tiny sides auto-broadcast below the threshold and the hint would
     // be moot — pin broadcasts off so strategy choice is visible
     val bcast = "spark.sql.autoBroadcastJoinThreshold"
+    val aqeBcast = "spark.sql.adaptive.autoBroadcastJoinThreshold"
     val prevBcast = spark.conf.get(bcast)
+    val prevAqeBcast = spark.conf.get(aqeBcast)
     spark.conf.set(bcast, "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set(aqeBcast, "-1")
     try {
       val kn3 = SparkEntry.queries("text_perplexity_kn3")(spark, sfDir)
         .queryExecution.executedPlan.toString
@@ -428,7 +430,8 @@ class ScaleSpec extends SparkSuite {
     } finally {
       spark.conf.unset(key)
       spark.conf.set(bcast, prevBcast)
-      spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
+      // restore, not unset: the engine session carries its own value
+      spark.conf.set(aqeBcast, prevAqeBcast)
       operators.Dedup.releaseCaches()
     }
   }
@@ -442,10 +445,10 @@ class ScaleSpec extends SparkSuite {
     val direct = SparkEntry.queries("text_perplexity_kn3")(spark, sfDir)
       .collect().map(r => r.toString).sorted
     operators.Dedup.releaseCaches()
+    // the shared session is the engine session, so this runs under its
+    // subset co-partitioning (requireAllClusterKeysForCoPartition=false,
+    // the plan the sf100 legs run); correctness must hold under it
     spark.conf.set(key, "0")
-    // the exact production session: Bench sets subset co-partitioning
-    // (the plan the sf100 legs run); correctness must hold under it
-    spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
     try {
       val scaled = SparkEntry.queries("text_perplexity_kn3")(spark, sfDir)
         .collect().map(r => r.toString).sorted
@@ -454,7 +457,6 @@ class ScaleSpec extends SparkSuite {
         s"first diff: ${scaled.zip(direct).find(p => p._1 != p._2)}")
     } finally {
       spark.conf.unset(key)
-      spark.conf.unset("spark.sql.requireAllClusterKeysForCoPartition")
       operators.Dedup.releaseCaches()
     }
   }
